@@ -14,8 +14,10 @@ from __future__ import annotations
 
 import sys
 from collections.abc import Callable
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -55,14 +57,14 @@ def _ensure_shipped(spark: SparkSession) -> None:
     zip_path = "/tmp/nail_parquet_spark_pyfiles.zip"
     import os
 
-    pkg = "/root/repo/nail_parquet_spark"
+    pkg = ROOT / "nail_parquet_spark"
     with zipfile.ZipFile(zip_path, "w") as z:
         for root, _, files in os.walk(pkg):
             if "__pycache__" in root:
                 continue
             for f in files:
                 full = os.path.join(root, f)
-                z.write(full, os.path.relpath(full, "/root/repo"))
+                z.write(full, os.path.relpath(full, ROOT))
     try:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:

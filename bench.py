@@ -11,8 +11,10 @@ import os
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -151,7 +153,7 @@ def run_encode_scaling() -> dict:
     # the §22 estimator-variance window); only an explicit env overrides
     r = subprocess.run(
         [sys.executable, "scripts/bench_encode.py", pair, str(ENCODE_ROWS)],
-        capture_output=True, text=True, cwd="/root/repo", env=env, timeout=3600,
+        capture_output=True, text=True, cwd=ROOT, env=env, timeout=3600,
     )
     line = [ln for ln in r.stdout.splitlines() if ln.startswith("{")]
     if not line:

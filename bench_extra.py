@@ -15,8 +15,10 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -63,11 +65,11 @@ def cmd_plan(names: list[str], tag: str) -> None:
     from nail_parquet_spark.plans.explain import plan_text
 
     spark, qs = _session()
-    os.makedirs("/root/repo/plans/r06", exist_ok=True)
+    os.makedirs(ROOT / "plans" / "r06", exist_ok=True)
     for name in names:
         df = qs[name](spark, SF_DIR)
         txt = plan_text(df, "formatted")
-        p = f"/root/repo/plans/r06/{name}_{tag}.txt"
+        p = ROOT / "plans" / "r06" / f"{name}_{tag}.txt"
         with open(p, "w") as f:
             f.write(txt)
         print(f"wrote {p} ({len(txt)} bytes)")

@@ -6,10 +6,10 @@ a parquet column chunk plus its footer metadata entry (what `nail metadata
 except blocks are first-class queryable data.
 
 All encoding happens inside ``mapInArrow`` (Arrow batches end-to-end, no
-per-row Python). Codec choice is made once per (executor partition, column)
-from a sampled prefix, or forced via the ``codecs`` override — the analogue
-of `nail optimize --compression/--dictionary` knobs
-(/root/reference/src/commands/optimize.rs:34-40).
+per-row Python). Codec choice is made once per job, on the driver, from a
+sampled prefix (``select.choose_codecs``) and shipped to every encoder task,
+or forced via the ``codecs`` override — the analogue of `nail optimize
+--compression/--dictionary` knobs (/root/reference/src/commands/optimize.rs:34-40).
 """
 
 from __future__ import annotations
@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame
 
 from nail_parquet_spark.codec.bloom import parse_bloom_spec as _parse_bloom
 from nail_parquet_spark.codec.kernels import encode_array, kind_of, xref_ref_of
-from nail_parquet_spark.codec.select import choose_codec, raw_bytes_of, xref_upgrade
+from nail_parquet_spark.codec.select import choose_codecs, raw_bytes_of
+# perfbench/trace.py wraps these two names on this module
+from nail_parquet_spark.codec.select import choose_codec, xref_upgrade  # noqa: F401
 
 # canonical block-table columns; the DDL derives from this list so callers
 # (compaction, tests) never string-parse the schema
@@ -126,11 +128,8 @@ def choose_codecs_for_df(
     allc = list(columns) + [c for c in ref_candidates if c not in columns]
     sample = df.select(*allc).limit(sample_rows).toArrow()
     arrs = {c: sample.column(c).combine_chunks() for c in allc}
-    out = {c: pinned[c] for c in ref_candidates}
-    for c in columns:
-        out[c] = choose_codec(arrs[c], policy=policy, min_mbps=min_mbps)[0]
-    out = xref_upgrade(arrs, out, policy=policy, min_mbps=min_mbps,
-                       upgradable=list(columns))
+    out = choose_codecs(arrs, columns, {c: pinned[c] for c in ref_candidates},
+                        policy=policy, min_mbps=min_mbps)
     return {c: out[c] for c in columns}
 
 
@@ -468,9 +467,7 @@ def _plan_parquet_encode(spark, path, columns, codecs, policy, sample_rows,
             c: sample.column(c).combine_chunks().slice(0, sample_rows)
             for c in sample_cols
         }
-        for c in missing:
-            chosen[c] = choose_codec(arrs[c], policy=policy)[0]
-        chosen = xref_upgrade(arrs, chosen, policy=policy, upgradable=missing)
+        chosen = choose_codecs(arrs, missing, chosen, policy=policy)
     _validate_codecs(chosen, all_cols)
 
     # num_partitions pins job parallelism (concurrent tasks) independently of

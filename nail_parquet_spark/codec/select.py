@@ -1,6 +1,8 @@
 """Per-column codec auto-selection from sampled statistics + trial encodes.
 
-Two stages, both executor-side (no driver round-trip):
+Selection runs once per job, serially, on the driver, over a sampled
+prefix of each column; the resulting ``{column: codec}`` table ships to
+the encoder tasks with their closure. Two stages:
   1. cheap sampled stats (cardinality ratio, avg run length, byte entropy,
      sortedness) prune the candidate list per column kind;
   2. the surviving candidates trial-encode the sample; the winner minimizes
@@ -12,8 +14,11 @@ even applies, see :253-257) with measured, per-column decisions.
 
 Policies:
   ratio    — smallest sample encoding wins, full stop
-  balanced — smallest among candidates whose sample throughput >= floor
-             (default 40 MB/s/core); fall back to ratio if none qualify
+  balanced — smallest among candidates whose static speed class
+             (``CODEC_SPEED_MBPS``) is >= the floor (default 40 MB/s/core).
+             Only those candidates are trial-encoded; the slower ones are
+             trialled, and the smallest of them wins, only if every
+             floor-passing trial raised
   speed    — fastest candidate within 1.3x of the smallest
 """
 
@@ -265,6 +270,27 @@ def choose_codec(
     else:
         cands = candidate_codecs(kind, st)
 
+    if policy in ("ratio", "speed"):
+        # both compare against the globally smallest encoding
+        results = _trial(sample, cands)
+    else:
+        # balanced: a speed class is static, so a below-floor candidate can
+        # only win when no floor-passing one encodes — trial it only then
+        results = (_trial(sample, [c for c in cands if codec_speed(c) >= min_mbps])
+                   or _trial(sample, [c for c in cands if codec_speed(c) < min_mbps]))
+    if not results:
+        return "plain", st
+
+    if policy == "speed":
+        floor_size = min(r[1] for r in results) * 1.3
+        ok = [r for r in results if r[1] <= floor_size]
+        return max(ok, key=lambda r: r[2])[0], st
+    # smallest wins; min() keeps the first of equal sizes (candidate order)
+    return min(results, key=lambda r: r[1])[0], st
+
+
+def _trial(sample: pa.Array, cands: list[str]) -> list[tuple[str, int, float]]:
+    """(codec, encoded bytes, speed class) of each candidate that encodes."""
     results = []
     for c in cands:
         try:
@@ -272,21 +298,7 @@ def choose_codec(
         except Exception:
             continue
         results.append((c, len(blk.payload), codec_speed(c)))
-    if not results:
-        return "plain", st
-
-    by_size = sorted(results, key=lambda r: r[1])
-    if policy == "ratio":
-        return by_size[0][0], st
-    if policy == "speed":
-        floor_size = by_size[0][1] * 1.3
-        ok = [r for r in results if r[1] <= floor_size]
-        return max(ok, key=lambda r: r[2])[0], st
-    # balanced
-    fast = [r for r in by_size if r[2] >= min_mbps]
-    if fast:
-        return fast[0][0], st
-    return by_size[0][0], st
+    return results
 
 
 def _containment_frac(va: pa.Array, vb: pa.Array, probe: int = 64) -> float:
@@ -381,3 +393,23 @@ def xref_upgrade(
         if ref:
             used_as_ref.add(ref)
     return chosen
+
+
+def choose_codecs(
+    arrs: dict[str, pa.Array],
+    missing: list[str],
+    pinned: dict[str, str],
+    policy: str = "balanced",
+    min_mbps: float = 40.0,
+) -> dict[str, str]:
+    """The per-job selection pass: ``choose_codec`` for every ``missing``
+    column's sample in ``arrs``, then ``xref_upgrade`` over those choices.
+
+    ``pinned`` codecs are kept as given; pinned str/bin columns whose
+    samples are in ``arrs`` may serve as xref references. Returns the pinned
+    codecs plus one codec per missing column."""
+    chosen = dict(pinned)
+    for c in missing:
+        chosen[c] = choose_codec(arrs[c], policy=policy, min_mbps=min_mbps)[0]
+    return xref_upgrade(arrs, chosen, policy=policy, min_mbps=min_mbps,
+                        upgradable=list(missing))

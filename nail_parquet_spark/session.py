@@ -14,6 +14,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """48g, capped at half of this host's RAM: a heap the JVM may grow past
+    physical memory gets the driver OOM-killed instead of collected."""
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    cap_mb = min(cap_mb, int(line.split()[1]) // 2048)
+                    break
+    except OSError:
+        pass  # no /proc (non-Linux driver): keep the 48g default
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "nail_parquet_spark",
     master: str | None = None,
@@ -46,7 +61,8 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
     )
     # Only set master when not already running inside a cluster submit.
     if not os.environ.get("SPARK_SUBMIT_DEPLOY_MODE"):

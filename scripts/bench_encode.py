@@ -30,7 +30,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PAIR = sys.argv[1] if len(sys.argv) > 1 else "1,4"
 ROWS = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000

@@ -1,10 +1,11 @@
 """Run every queries() entry vs its oracle_sql() on DuckDB, mirroring the
 driver's comparison: row count, schema width, and order-insensitive
 value-hash (columns sorted by name, floats rounded)."""
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 

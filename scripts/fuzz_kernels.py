@@ -1,7 +1,8 @@
 """Quick round-trip fuzz for codec kernels (dev loop; pytest mirrors this)."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
 import pyarrow as pa
 

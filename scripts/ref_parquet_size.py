@@ -10,7 +10,7 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 DATA = os.environ.get("BENCH_DATA_DIR", "/tmp/nail_bench_web")

@@ -1,8 +1,8 @@
 """End-to-end M1 smoke: synthesize webpages -> encode -> inspect -> decode ->
 verify bit-identity. Dev loop script; pytest mirrors it."""
-import sys, time
+import os, sys, time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from nail_parquet_spark.session import get_spark
 from nail_parquet_spark.synth import webpages_spark
 from nail_parquet_spark.codec.encode import encode_table
